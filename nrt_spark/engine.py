@@ -62,6 +62,27 @@ def write_tokens_bucketed(tokens_df: DataFrame, path: str,
      .write.partitionBy("bucket").mode("overwrite").parquet(path))
 
 
+def _fit_step(pdf: pd.DataFrame, bucket: int, params: dict,
+              he_day: int | None, needs_bands: bool) -> pd.DataFrame:
+    """One bucket's history fit on full-series token rows — shared by
+    the shuffled and the storage-partitioned fit (byte-identical)."""
+    pdf = pdf.sort_values("doc_id").reset_index(drop=True)
+    y = tokens_to_matrix(list(pdf["tokens"]))
+    days = grid_days(y.shape[0])
+    green = swir = None
+    if needs_bands:
+        green = tokens_to_matrix(list(pdf["green_tokens"]), max_len=len(y))
+        swir = tokens_to_matrix(list(pdf["swir_tokens"]), max_len=len(y))
+    if he_day is not None:
+        keep = days <= he_day
+        y, days = y[keep], days[keep]
+        if needs_bands:
+            green, swir = green[keep], swir[keep]
+    state = fit_state(y, days, params, green=green, swir=swir)
+    last = np.full(len(pdf), int(days[-1]) if len(days) else 0)
+    return state_to_pdf(state, pdf["doc_id"].to_numpy(), bucket, last)
+
+
 def _monitor_step(state_pdf: pd.DataFrame, toks_pdf: pd.DataFrame,
                   params: dict, update_mask: bool) -> pd.DataFrame:
     """One bucket's monitor advance on full-series token rows — shared
@@ -159,24 +180,8 @@ class NrtEngine:
         def fit_fn(pdf: pd.DataFrame) -> pd.DataFrame:
             if not len(pdf):
                 return pd.DataFrame(columns=STATE_COLUMNS)
-            pdf = pdf.sort_values("doc_id").reset_index(drop=True)
-            y = tokens_to_matrix(list(pdf["tokens"]))
-            days = grid_days(y.shape[0])
-            green = swir = None
-            if needs_bands:
-                green = tokens_to_matrix(list(pdf["green_tokens"]),
-                                         max_len=y.shape[0])
-                swir = tokens_to_matrix(list(pdf["swir_tokens"]),
-                                        max_len=y.shape[0])
-            if he_day is not None:
-                keep = days <= he_day
-                y, days = y[keep], days[keep]
-                if needs_bands:
-                    green, swir = green[keep], swir[keep]
-            state = fit_state(y, days, params, green=green, swir=swir)
-            last = np.full(len(pdf), int(days[-1]) if len(days) else 0)
-            return state_to_pdf(state, pdf["doc_id"].to_numpy(),
-                                int(pdf["bucket"].iloc[0]), last)
+            return _fit_step(pdf, int(pdf["bucket"].iloc[0]), params,
+                             he_day, needs_bands)
 
         # shuffle only what the UDF reads (band arrays double the shuffle
         # volume; keep them out unless the screen needs them)
@@ -290,28 +295,9 @@ class NrtEngine:
                         toks = pq.read_table(part, columns=cols).to_pandas()
                     except FileNotFoundError:
                         continue
-                    if not len(toks):
-                        continue
-                    toks = toks.sort_values("doc_id").reset_index(drop=True)
-                    y = tokens_to_matrix(list(toks["tokens"]))
-                    days = grid_days(y.shape[0])
-                    green = swir = None
-                    if needs_bands:
-                        green = tokens_to_matrix(list(toks["green_tokens"]),
-                                                 max_len=y.shape[0])
-                        swir = tokens_to_matrix(list(toks["swir_tokens"]),
-                                                max_len=y.shape[0])
-                    if he_day is not None:
-                        keep = days <= he_day
-                        y, days = y[keep], days[keep]
-                        if needs_bands:
-                            green, swir = green[keep], swir[keep]
-                    state = fit_state(y, days, params, green=green,
-                                      swir=swir)
-                    last = np.full(len(toks),
-                                   int(days[-1]) if len(days) else 0)
-                    yield state_to_pdf(state, toks["doc_id"].to_numpy(),
-                                       int(b), last)
+                    if len(toks):
+                        yield _fit_step(toks, int(b), params, he_day,
+                                        needs_bands)
 
         buckets = self.spark.range(0, self.num_buckets, 1,
                                    numPartitions=self.num_buckets)

@@ -18,7 +18,6 @@ from nrt_spark.kernels.stats import (
 )
 from nrt_spark.kernels.fit import (
     ols,
-    weighted_ols,
     rirls,
     ccdc_stable_fit,
     roc_stable_fit,
@@ -29,7 +28,6 @@ from nrt_spark.kernels.efp import (
     cusum_rec_efp,
     cusum_rec_sctest,
     brownian_motion_pvalue,
-    cusum_rec_boundary,
     cusum_rec_test_crit,
     cusum_ols_test_crit,
     mosum_ols_test_crit,
@@ -47,7 +45,6 @@ __all__ = [
     "ncdf",
     "nan_percentile_axis0",
     "ols",
-    "weighted_ols",
     "rirls",
     "ccdc_stable_fit",
     "roc_stable_fit",
@@ -57,7 +54,6 @@ __all__ = [
     "cusum_rec_efp",
     "cusum_rec_sctest",
     "brownian_motion_pvalue",
-    "cusum_rec_boundary",
     "cusum_rec_test_crit",
     "cusum_ols_test_crit",
     "mosum_ols_test_crit",

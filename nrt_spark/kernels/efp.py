@@ -15,7 +15,7 @@ import math
 
 import numpy as np
 
-from nrt_spark.kernels.stats import ncdf
+from nrt_spark.kernels.stats import colsum, dot_last, ncdf, solve
 
 #: Critical value for the reverse-ordered Rec-CUSUM test at alpha=0.05
 #: (reference ``nrt/fit_methods.py:256``; reproducible via
@@ -23,100 +23,129 @@ from nrt_spark.kernels.stats import ncdf
 REC_CUSUM_CRIT_005 = 0.9478982340418134
 
 
-def recresid(X: np.ndarray, y: np.ndarray, span: int) -> np.ndarray:
-    """Standardized recursive residuals of y ~ X (Brown-Durbin-Evans).
+def recresid(X: np.ndarray, y: np.ndarray, span: int,
+             n: np.ndarray | None = None) -> np.ndarray:
+    """Standardized recursive residuals of y ~ X (Brown-Durbin-Evans)
+    for K series at once (``_recresid``, reference ``utils_efp.py:216-301``).
 
-    The t-th recursive residual is the one-step-ahead prediction error for
-    y_t from the OLS fit on observations < t, standardized by its
-    prediction-error variance; (X'X)^-1 is maintained with rank-1 updates.
-    Matches ``_recresid`` (reference ``nrt/utils_efp.py:216-301``).
+    The t-th value is the one-step-ahead prediction error for y_t from
+    the OLS fit on observations < t over its standard error; (X'X)^-1 is
+    kept by rank-1 updates, one pass over t for the batch.  A series'
+    zero rows past its length leave its state unchanged.  A non-positive
+    variance (the downdate lost all precision) gives NaN.
 
     Args:
-        X: (M, N) design matrix (no NaN).
-        y: (M,) dependent variable (no NaN).
+        X: (M, K, N) per-series design rows.
+        y: (M, K) observations.
         span: number of observations used for the initial fit.
+        n: (K,) series lengths; rows past them must be zero in X and y.
 
     Returns:
-        (M,) array, NaN for the first ``span - 1`` entries.
+        (M, K), NaN before row ``span - 1`` and from ``n`` on.
     """
-    nobs, nvars = X.shape
-    w = np.full(nobs, np.nan)
-    var = np.full(nobs, np.nan)
-
-    X0, y0 = X[:span], y[:span]
-    Sinv = np.linalg.inv(X0.T @ X0)          # (X'X)^-1 on the initial span
-    b = Sinv @ (X0.T @ y0)
-
-    x_last = X[span - 1]
-    w[span - 1] = y[span - 1] - x_last @ b
-    var[span - 1] = 1.0 + x_last @ (Sinv @ x_last)
-
-    for t in range(span, nobs):
+    M, K, N = X.shape
+    XT = X[:span].transpose(1, 2, 0)
+    S = dot_last(XT[:, :, None], XT[:, None])
+    Sinv = solve(S, np.broadcast_to(np.eye(N), S.shape))  # (X'X)^-1, initial span
+    b = dot_last(Sinv, dot_last(XT, y[:span].T[:, None])[:, None])
+    w, var = np.full((2, M, K), np.nan)
+    for t in range(span - 1, M):
         x_t = X[t]
-        e_t = y[t] - x_t @ b                  # prediction error with b_{t-1}
-        Sx = Sinv @ x_t
-        f_t = 1.0 + x_t @ Sx
-        Sinv = Sinv - np.outer(Sx, Sx) / f_t  # Judge et al. eqn 5.5.15
-        b = b + Sx * (e_t / f_t)              # Judge et al. eqn 5.5.14
-        w[t] = e_t
-        var[t] = f_t
+        Sx = dot_last(Sinv, x_t[:, None])
+        w[t] = e_t = y[t] - dot_last(x_t, b)     # prediction error with b_{t-1}
+        var[t] = f_t = 1.0 + dot_last(x_t, Sx)
+        if t >= span:                            # Judge et al. eqn 5.5.14-15
+            Sinv = Sinv - Sx[:, :, None] * Sx[:, None, :] / f_t[:, None, None]
+            b = b + Sx * (e_t / f_t)[:, None]
+    if n is not None:
+        w[np.arange(M)[:, None] >= n] = np.nan
+    return w / np.sqrt(np.where(var > 0, var, np.nan))
 
-    return w / np.sqrt(var)
 
-
-def cusum_rec_efp(X: np.ndarray, y: np.ndarray) -> np.ndarray:
+def cusum_rec_efp(X: np.ndarray, y: np.ndarray,
+                  n: np.ndarray | None = None) -> np.ndarray:
     """Rec-CUSUM empirical fluctuation process (strucchange ``efp`` analog;
-    reference ``nrt/utils_efp.py:192-201``)."""
-    n, k = X.shape
-    k = k + 1
-    w = recresid(X, y, k)[k:]
-    sigma = np.std(w)
-    w = np.concatenate((np.array([0.0]), w))
-    return np.cumsum(w) / (sigma * (n - k) ** 0.5)
+    reference ``nrt/utils_efp.py:192-201``), batched like :func:`recresid`.
+
+    Returns:
+        (M - N, K) process: series k's process is its first
+        ``n[k] - N`` entries, NaN after; a NaN recursive residual makes
+        all of it NaN.
+    """
+    M, K, N = X.shape
+    span = N + 1
+    cnt = np.full(K, M - span) if n is None else np.asarray(n) - span
+    live = np.arange(M - span)[:, None] < cnt
+    w = np.where(live, recresid(X, y, span, n)[span:], 0.0)
+    with np.errstate(divide="ignore", invalid="ignore"):
+        dev = np.where(live, w - colsum(w) / cnt, 0.0)
+        sigma = np.sqrt(colsum(dev * dev) / cnt)
+        process = np.cumsum(np.r_[np.zeros((1, K)), w], axis=0) \
+            / (sigma * cnt ** 0.5)
+    process[1:][~live] = np.nan
+    return process
 
 
-def cusum_rec_sctest(process: np.ndarray) -> float:
-    """Sup-statistic of the Rec-CUSUM process (reference ``utils_efp.py:204-212``)."""
-    x = process[1:]
-    j = np.linspace(0, 1, x.size + 1)[1:]
-    return float(np.abs(x / (1 + 2 * j)).max())
+def cusum_rec_sctest(process: np.ndarray, n: np.ndarray) -> np.ndarray:
+    """Sup-statistic of the Rec-CUSUM process (reference
+    ``utils_efp.py:204-212``), per column of an (L, K) process whose
+    column k is ``n[k]`` long; NaN if that part holds a NaN."""
+    size = np.asarray(n) - 1
+    i = np.arange(1, len(process))[:, None]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        j = np.where(i == size, 1.0, i * (1.0 / size))  # linspace(0, 1, n)[1:]
+        z = np.where(i <= size, np.abs(process[1:] / (1 + 2 * j)), 0.0)
+    return np.where(size > 0, z.max(axis=0, initial=0.0), np.nan)
 
 
-def brownian_motion_pvalue(x: float, k: int) -> float:
-    """P-value approximation for the Brownian-motion crossing statistic
-    (reference ``utils_efp.py:104-115``)."""
-    if x < 0.3:
-        p = 1 - 0.1464 * x
-    else:
-        p = 2 * (
-            1
-            - ncdf(3 * x)
-            + np.exp(-4 * x ** 2) * (ncdf(x) + ncdf(5 * x) - 1)
-            - np.exp(-16 * x ** 2) * (1 - ncdf(x))
-        )
+def brownian_motion_pvalue(x, k: int):
+    """P-value approximation for the Brownian-motion crossing statistic,
+    elementwise (reference ``utils_efp.py:104-115``)."""
+    p = np.where(
+        x < 0.3,
+        1 - 0.1464 * x,
+        2 * (1
+             - ncdf(3 * x)
+             + np.exp(-4 * x ** 2) * (ncdf(x) + ncdf(5 * x) - 1)
+             - np.exp(-16 * x ** 2) * (1 - ncdf(x))))
     return 1 - (1 - p) ** k
 
 
-def cusum_rec_boundary(process: np.ndarray, crit: float = REC_CUSUM_CRIT_005) -> np.ndarray:
-    """Linear Rec-CUSUM boundary, strucchange ``boundary.efp`` analog
-    (reference ``utils_efp.py:118-131``)."""
-    n = process.size
-    return crit + (2 * crit * np.arange(0, n) / (n - 1))
-
-
 def history_roc(X: np.ndarray, y: np.ndarray, alpha: float = 0.05,
-                crit: float = REC_CUSUM_CRIT_005) -> int:
-    """Reverse-ordered Rec-CUSUM stable-history start index.
+                crit: float = REC_CUSUM_CRIT_005):
+    """Reverse-ordered Rec-CUSUM stable-history start index per series
+    (reference ``utils_efp.py:67-131``).
 
-    Returns 0 if the series is fully stable, else the index in ``y`` after
-    which the series is stable (reference ``utils_efp.py:67-100``).
+    Each series' non-NaN rows are reversed into one (M, K, N) design for
+    one :func:`cusum_rec_efp` pass.  The index is 0 for a stable series,
+    else the first crossing of the boundary ``crit * (1 + 2t / (n - 1))``
+    counted back from the series' end, as a position among its non-NaN
+    values.  A NaN statistic is not significant: index 0.
+
+    Args:
+        X: (M, N) float64 design matrix.
+        y: (M, K) float64 observations, NaN = missing.
+
+    Returns:
+        (K,) int64 indices.
     """
-    process = cusum_rec_efp(X[::-1], y[::-1])
-    stat = cusum_rec_sctest(process)
-    if brownian_motion_pvalue(stat, 1) < alpha:
-        boundary = cusum_rec_boundary(process, crit)
-        return int(len(process) - np.where(np.abs(process) > boundary)[0].min())
-    return 0
+    valid = ~np.isnan(y)
+    n = np.count_nonzero(valid, axis=0)
+    rows, cols = np.nonzero(valid)
+    pos = (n - np.cumsum(valid, axis=0))[rows, cols]    # reversed position
+    Xr = np.zeros(y.shape + X.shape[1:])
+    yr = np.zeros(y.shape)
+    Xr[pos, cols] = X[rows]
+    yr[pos, cols] = y[rows, cols]
+
+    process = cusum_rec_efp(Xr, yr, n)
+    n_p = n - X.shape[1]                                # process lengths
+    t = np.arange(len(process))[:, None]
+    with np.errstate(divide="ignore", invalid="ignore"):
+        cross = (t < n_p) & (np.abs(process) > crit + (2 * crit * t / (n_p - 1)))
+    broke = (brownian_motion_pvalue(cusum_rec_sctest(process, n_p), 1) < alpha) \
+        & cross.any(axis=0)
+    return np.where(broke, n_p - np.argmax(cross, axis=0), 0).astype(np.int64)
 
 
 # ---------------------------------------------------------------------------
@@ -258,9 +287,10 @@ def mosum_init_window(residuals_norm: np.ndarray, winsize: np.ndarray) -> np.nda
     K = residuals_norm.shape[1]
     depth = int(winsize.max()) if winsize.size else 0
     out = np.zeros((depth, K))
-    for k in np.flatnonzero(winsize > 0):
-        r = residuals_norm[:, k]
-        r = r[~np.isnan(r)]
-        w = int(winsize[k])
-        out[:w, k] = r[-w:]
+    valid = ~np.isnan(residuals_norm)
+    # slot of each value counted from the series' last-w-th value
+    slot = np.cumsum(valid, axis=0) - 1 \
+        - (np.count_nonzero(valid, axis=0) - winsize)
+    keep = valid & (slot >= 0)
+    out[slot[keep], np.nonzero(keep)[1]] = residuals_norm[keep]
     return out

@@ -2,15 +2,22 @@
 
 Numeric semantics match the reference (``/root/reference/nrt/fit_methods.py``)
 including its sign convention — fit residuals are ``X @ beta - y``
-(prediction minus observation), the *opposite* of monitoring residuals.
-Implementations are plain numpy; Spark tasks provide outer parallelism.
+(prediction minus observation), the *opposite* of monitoring residuals
+(RIRLS returns ``y - X @ beta``, as the reference does).
+
+OLS, RIRLS and ROC run over the whole (M, K) batch at once, batch-invariant
+(see :mod:`nrt_spark.kernels.stats`): NaN is a row of weight 0 in one
+stacked weighted solve, RIRLS iterates only the series still moving and
+ROC's recursion runs once over t; CCDC-stable shrinks every unstable
+series' window in the same round.
 """
 
 from __future__ import annotations
 
 import numpy as np
 
-from nrt_spark.kernels.stats import nanlstsq, mad, bisquare
+from nrt_spark.kernels.stats import (bisquare, mad, nanlstsq, nanmean0,
+                                     predict, weighted_solve)
 from nrt_spark.kernels.efp import history_roc, REC_CUSUM_CRIT_005
 
 _F32_EPS = float(np.finfo(np.float32).eps)
@@ -23,17 +30,7 @@ def ols(X: np.ndarray, y: np.ndarray):
         beta (N, K), residuals (M, K) = X @ beta - y (NaN where y is NaN).
     """
     beta = nanlstsq(X, y)
-    residuals = X @ beta - y
-    return beta, residuals
-
-
-def weighted_ols(X: np.ndarray, y: np.ndarray, w: np.ndarray):
-    """Weighted OLS for a single series via sqrt-weight scaling
-    (reference ``fit_methods.py:143-164``)."""
-    sw = np.sqrt(w)
-    beta, *_ = np.linalg.lstsq(X * sw[:, None], y * sw, rcond=-1)
-    resid = y - X @ beta
-    return beta, resid
+    return beta, predict(X, beta) - y
 
 
 def rirls(X: np.ndarray, y: np.ndarray, M=bisquare, tune: float = 4.685,
@@ -41,43 +38,36 @@ def rirls(X: np.ndarray, y: np.ndarray, M=bisquare, tune: float = 4.685,
           update_scale: bool = True, maxiter: int = 50, tol: float = 1e-8):
     """Robust regression via iteratively reweighted least squares.
 
-    Tukey-biweight weights with MAD scale, per series; convergence when no
-    coefficient moved by more than ``tol`` or after ``maxiter`` iterations
-    (reference ``fit_methods.py:74-140``, itself derived from the public
-    yatsm package).
+    Tukey-biweight weights with MAD scale, per series; a series stops
+    when no coefficient moved by more than ``tol`` or after ``maxiter``
+    iterations (reference ``fit_methods.py:74-140``, after yatsm).
 
     Returns:
-        beta (N, K), residuals (M, K) float64 with NaN kept in place.
+        beta (N, K), residuals (M, K) = y - X @ beta, NaN kept in place.
     """
     X = np.asarray(X, dtype=np.float64)
     y = np.asarray(y, dtype=np.float64)
-    beta = np.zeros((X.shape[1], y.shape[1]), dtype=np.float64)
-    resid = np.full_like(y, np.nan, dtype=np.float64)
-    for k in range(y.shape[1]):
-        yk = y[:, k]
-        keep = ~np.isnan(yk)
-        Xs, ys = X[keep], yk[keep]
-        b, r = weighted_ols(Xs, ys, np.ones_like(ys))
-        scale = scale_est(r, c=scale_constant)
-        if scale < _F32_EPS:
-            beta[:, k] = b
-            resid[keep, k] = r
-            continue
-        iteration, converged = 1, False
-        while not converged and iteration < maxiter:
-            b_prev = b.copy()
-            weights = M(r / scale, c=tune)
-            b, r = weighted_ols(Xs, ys, weights)
-            if update_scale:
-                scale = max(_F32_EPS, scale_est(r, c=scale_constant))
-            iteration += 1
-            # Reference quirk kept for parity: the convergence test is
-            # `not any(|b| - prev > tol)` elementwise on (b - prev > tol)
-            # after fabs of the *difference with* tol, i.e. effectively
-            # one-sided; replicate its exact expression.
-            converged = not np.any(np.fabs(b - b_prev > tol))
-        beta[:, k] = b
-        resid[keep, k] = r
+    keep = ~np.isnan(y)
+    beta = weighted_solve(X, y, keep.astype(np.float64))
+    resid = y - predict(X, beta)
+    scale = scale_est(resid, c=scale_constant)
+    active = np.flatnonzero(scale >= _F32_EPS)
+    for _ in range(1, maxiter):
+        if not active.size:
+            break
+        ya = y[:, active]
+        weights = np.where(keep[:, active],
+                           M(resid[:, active] / scale[active], c=tune), 0.0)
+        b = weighted_solve(X, ya, weights)
+        resid[:, active] = ya - predict(X, b)
+        if update_scale:
+            scale[active] = np.maximum(
+                _F32_EPS, scale_est(resid[:, active], c=scale_constant))
+        # Reference quirk kept for parity: the convergence test is one-sided,
+        # `not any(fabs(b - prev > tol))`, i.e. no coefficient grew by > tol.
+        moved = np.any(b - beta[:, active] > tol, axis=0)
+        beta[:, active] = b
+        active = active[moved]
     return beta, resid
 
 
@@ -89,7 +79,8 @@ def ccdc_stable_fit(X: np.ndarray, y: np.ndarray, dates: np.ndarray,
     (|slope|/RMSE, |first resid|/RMSE or |last resid|/RMSE >= threshold),
     drop the two oldest observations and refit, while at least
     ``1.5 * n_regressors`` observations and more than 183 days of data
-    remain.
+    remain.  Each round refits all series still shrinking in one stacked
+    weighted solve.
 
     Args:
         X: (M, N) design matrix (column 1 must be the trend).
@@ -105,40 +96,31 @@ def ccdc_stable_fit(X: np.ndarray, y: np.ndarray, dates: np.ndarray,
     dates = np.asarray(dates)
     min_obs = int(X.shape[1] * 1.5)
     K = y.shape[1]
-    beta = np.zeros((X.shape[1], K), dtype=np.float64)
+    valid = ~np.isnan(y)
+    size = np.count_nonzero(valid, axis=0)             # window size per series
+    after = size - np.cumsum(valid, axis=0)            # valid rows after a row
+    last = len(y) - 1 - np.argmax(valid[::-1], axis=0)
+    beta = np.zeros((X.shape[1], K))
     residuals = np.full_like(y, np.nan)
     stable = np.zeros(K, dtype=bool)
     fit_start = np.zeros(K)
-    for k in range(K):
-        yk = y[:, k]
-        keep = ~np.isnan(yk)
-        Xs, ys, ds = X[keep], yk[keep], dates[keep]
-        is_stable = False
-        jdx = len(ys)
-        b_sub = np.zeros(X.shape[1])
-        r_sub = np.zeros(0)
-        for jdx in range(len(ys), min_obs - 1, -2):
-            X_w, y_w = Xs[-jdx:], ys[-jdx:]
-            b_sub = np.linalg.solve(X_w.T @ X_w, X_w.T @ y_w)
-            r_sub = X_w @ b_sub - y_w
-            rmse = np.sqrt(np.mean(r_sub ** 2))
-            is_stable = (
-                (np.fabs(b_sub[1]) / rmse < threshold)
-                and (np.fabs(r_sub[0]) / rmse < threshold)
-                and (np.fabs(r_sub[-1]) / rmse < threshold)
-            )
-            if is_stable:
-                break
-            if ds[-1] - ds[-jdx] < 183:
-                break
-        beta[:, k] = b_sub
-        # Residuals are positional within the kept (non-NaN) rows; scatter
-        # them back to the tail of the kept positions, as the reference
-        # does on its dense matrix.
-        kept_idx = np.flatnonzero(keep)
-        residuals[kept_idx[-jdx:], k] = r_sub
-        stable[k] = bool(is_stable)
-        fit_start[k] = ds[-jdx]
+    todo = np.flatnonzero(size >= min_obs)
+    while todo.size:
+        win = valid[:, todo] & (after[:, todo] < size[todo])
+        b = weighted_solve(X, y[:, todo], win.astype(np.float64))
+        r = np.where(win, predict(X, b) - y[:, todo], np.nan)
+        first = np.argmax(win, axis=0)
+        cols = np.arange(todo.size)
+        with np.errstate(divide="ignore", invalid="ignore"):
+            rmse = np.sqrt(nanmean0(r ** 2))
+            ok = ((np.fabs(b[1]) / rmse < threshold)
+                  & (np.fabs(r[first, cols]) / rmse < threshold)
+                  & (np.fabs(r[last[todo], cols]) / rmse < threshold))
+        beta[:, todo], residuals[:, todo] = b, r
+        stable[todo], fit_start[todo] = ok, dates[first]
+        size[todo] -= 2                                # drop the two oldest
+        todo = todo[~ok & (dates[last[todo]] - dates[first] >= 183)
+                    & (size[todo] >= min_obs)]
     return beta, residuals, stable, fit_start
 
 
@@ -152,30 +134,25 @@ def roc_stable_fit(X: np.ndarray, y: np.ndarray, dates: np.ndarray,
     less than 183 days remain, else OLS-fit the stable tail.
 
     Returns:
-        beta (N, K), residuals (M, K) = X @ beta - y on the full series,
-        is_stable (K,) bool, fit_start (K,) uint16 days since epoch.
+        beta (N, K) (NaN for unstable series), residuals (M, K) =
+        X @ beta - y on the full series, is_stable (K,) bool,
+        fit_start (K,) uint16 days since epoch (0 for unstable series).
     """
     X = np.asarray(X, dtype=np.float64)
     y = np.asarray(y, dtype=np.float64)
-    K = y.shape[1]
-    nreg = X.shape[1]
-    is_stable = np.ones(K, dtype=bool)
-    fit_start = np.zeros(K, dtype=np.uint16)
-    beta = np.full((nreg, K), np.nan, dtype=np.float64)
-    for k in range(K):
-        yk = y[:, k]
-        keep = ~np.isnan(yk)
-        ys, Xs = yk[keep], X[keep]
-        stable_idx = history_roc(Xs, ys, alpha=alpha, crit=crit)
-        if len(ys) - stable_idx < nreg + 1:
-            is_stable[k] = False
-            continue
-        ds = dates[keep]
-        if ds[-1] - ds[stable_idx] < 183:
-            is_stable[k] = False
-            continue
-        X_st, y_st = Xs[stable_idx:], ys[stable_idx:]
-        beta[:, k] = np.linalg.solve(X_st.T @ X_st, X_st.T @ y_st)
-        fit_start[k] = ds[stable_idx]
-    residuals = X @ beta - y
-    return beta, residuals, is_stable, fit_start
+    dates = np.asarray(dates)
+    K, nreg = y.shape[1], X.shape[1]
+    valid = ~np.isnan(y)
+    n = np.count_nonzero(valid, axis=0)
+    rank = np.cumsum(valid, axis=0) - 1              # position among valid rows
+    stable_idx = history_roc(X, y, alpha=alpha, crit=crit)
+    tail = valid & (rank >= stable_idx)
+    first = dates[np.argmax(tail, axis=0)]
+    last = dates[len(y) - 1 - np.argmax(valid[::-1], axis=0)]
+    is_stable = (n - stable_idx >= nreg + 1) & (last - first >= 183)
+
+    beta = np.full((nreg, K), np.nan)
+    beta[:, is_stable] = weighted_solve(X, y[:, is_stable],
+                                        tail[:, is_stable].astype(np.float64))
+    fit_start = np.where(is_stable, first, 0).astype(np.uint16)
+    return beta, predict(X, beta) - y, is_stable, fit_start

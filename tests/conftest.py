@@ -11,8 +11,14 @@ from __future__ import annotations
 import os
 from pathlib import Path
 
-import numpy as np
-import pytest
+# Pin BLAS to one thread before numpy loads it: OpenBLAS reads these
+# once, at load time, so setting them later (e.g. in a fixture) leaves
+# the in-process oracles running multi-threaded BLAS.
+os.environ.setdefault("OPENBLAS_NUM_THREADS", "1")
+os.environ.setdefault("MKL_NUM_THREADS", "1")
+
+import numpy as np  # noqa: E402
+import pytest  # noqa: E402
 
 REF_DATA = Path("/root/reference/tests/unit_tests/data")
 
@@ -51,8 +57,6 @@ def romania(ref_data_dir):
 
 @pytest.fixture(scope="session")
 def spark():
-    os.environ.setdefault("OPENBLAS_NUM_THREADS", "1")
-    os.environ.setdefault("MKL_NUM_THREADS", "1")
     from nrt_spark.session import get_spark
 
     spark = get_spark(cores=4, app_name="nrt_spark_tests",

@@ -49,16 +49,30 @@ ENGINE_OVERRIDES = {
     "iqr": {"trend": False},
 }
 
+#: the default fit methods (ROC, RIRLS, CCDC-stable, the Shewhart
+#: screen) at bucket counts from one bucket to more buckets than series
+DEFAULT_FITS = {
+    "cusum-roc": ("cusum", {}),
+    "mosum-roc": ("mosum", {}),
+    "mosum-rirls": ("mosum", {"method": "RIRLS"}),
+    "ccdc-stable": ("ccdc", {}),
+    "ewma-shewhart": ("ewma", {}),
+}
+ORACLE_CASES = (
+    [pytest.param(m, ENGINE_OVERRIDES[m], 8, id=m) for m in ENGINE_OVERRIDES]
+    + [pytest.param(m, kw, b, id=f"{name}-b{b}")
+       for name, (m, kw) in DEFAULT_FITS.items() for b in (1, 7, 64)])
 
-@pytest.mark.parametrize("monitor", ["ewma", "cusum", "mosum", "ccdc", "iqr"])
-def test_engine_matches_oracle(spark, tokens, monitor):
-    eng = NrtEngine(spark, monitor, num_buckets=8, **ENGINE_OVERRIDES[monitor])
+
+@pytest.mark.parametrize("monitor,overrides,num_buckets", ORACLE_CASES)
+def test_engine_matches_oracle(spark, tokens, monitor, overrides,
+                               num_buckets):
+    eng = NrtEngine(spark, monitor, num_buckets=num_buckets, **overrides)
     state_df = eng.fit(tokens, history_end=HISTORY_END)
     final = eng.monitor(state_df, tokens).toPandas().sort_values(
         "doc_id").reset_index(drop=True)
 
-    doc_ids, ostate = _oracle(tokens.toPandas(), monitor,
-                              **ENGINE_OVERRIDES[monitor])
+    doc_ids, ostate = _oracle(tokens.toPandas(), monitor, **overrides)
     assert list(final["doc_id"]) == list(doc_ids)
     np.testing.assert_array_equal(final["mask"].to_numpy(dtype=np.uint8),
                                   ostate["mask"])

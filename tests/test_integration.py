@@ -96,6 +96,7 @@ def test_session_warmup_runs_clean_and_once(spark):
     S._WARMED.add(app_id)
     before = set(S._WARMED)
     import os
+    prior = os.environ.get("NRT_SESSION_WARMUP")
     os.environ["NRT_SESSION_WARMUP"] = "1"
     try:
         again = S.get_spark(cores=4, app_name="nrt_spark_tests",
@@ -103,4 +104,7 @@ def test_session_warmup_runs_clean_and_once(spark):
         assert again.sparkContext.applicationId == app_id
         assert S._WARMED == before   # no duplicate warm-up entry
     finally:
-        os.environ["NRT_SESSION_WARMUP"] = "0"
+        if prior is None:
+            os.environ.pop("NRT_SESSION_WARMUP", None)
+        else:
+            os.environ["NRT_SESSION_WARMUP"] = prior

@@ -15,10 +15,7 @@ def test_history_roc_golden(romania):
     # Golden indices from R bFast (1-indexed): [1, 8, 49, 62, 1]
     X, y, _ = romania
     expected = np.array([1, 8, 49, 62, 1], dtype="float32") - 1
-    got = np.zeros(y.shape[1])
-    for k in range(y.shape[1]):
-        keep = ~np.isnan(y[:, k])
-        got[k] = efp.history_roc(X[keep], y[keep, k])
+    got = efp.history_roc(X, y)
     np.testing.assert_allclose(got, expected)
 
 
@@ -27,7 +24,7 @@ def test_efp_process_golden(romania, ref_data_dir):
     golden = np.genfromtxt(ref_data_dir / "efp_result.csv", delimiter=",",
                            dtype=np.float64, missing_values="NA")
     keep = ~np.isnan(y[:, 0])
-    process = efp.cusum_rec_efp(X[keep][::-1], y[keep, 0][::-1])
+    process = efp.cusum_rec_efp(X[keep][::-1, None], y[keep, :1][::-1])[:, 0]
     k = X.shape[1] + 2
     np.testing.assert_allclose(process[k:], golden[k:], rtol=1e-2)
 
@@ -134,7 +131,7 @@ def test_recresid_golden(romania, ref_data_dir):
     span = X.shape[1] + 1
     for k in range(y.shape[1]):
         keep = ~np.isnan(y[:, k])
-        rr = efp.recresid(X[keep], y[keep, k], span)
+        rr = efp.recresid(X[keep][:, None], y[keep, k:k + 1], span)[:, 0]
         g = golden[keep, k]
         # strucchange starts reporting at index span (0-based span offset)
         np.testing.assert_allclose(rr[span:], g[span:], rtol=5e-3, atol=1e-8)

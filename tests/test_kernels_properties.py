@@ -116,7 +116,7 @@ def test_recresid_equals_direct_refit(seed, k):
                          rng.standard_normal((n, k - 1))])
     y = X @ rng.standard_normal(k) + 0.1 * rng.standard_normal(n)
     span = k + 1
-    got = recresid(X, y, span)
+    got = recresid(X[:, None], y[:, None], span)[:, 0]
     for t in range(span, n):
         b, *_ = np.linalg.lstsq(X[:t], y[:t], rcond=None)
         e = y[t] - X[t] @ b
